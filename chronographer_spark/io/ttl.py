@@ -21,14 +21,29 @@ from ..vocab import PREFIXES
 XSD_DATE = "http://www.w3.org/2001/XMLSchema#date"
 
 
+def _swap_prefix(col, pairs):
+    """One flat CASE WHEN over `pairs` (from_prefix, to_prefix): the first
+    matching prefix is swapped, other values pass through. The input is
+    referenced twice per pair plus once for the fallback, so the expression
+    grows linearly with the pairs. (Chaining `when(out...).otherwise(out)`
+    re-reads the previous CASE three times per pair: a 3^n-node tree.)
+
+    Equal to applying the swaps one after another as long as no swapped
+    value starts with a later pair's from_prefix — true here: expanded
+    values start with a namespace and compacted ones with a CURIE prefix,
+    and no CURIE prefix starts a namespace or the other way round."""
+    out = None
+    for old, new in pairs:
+        hit = col.startswith(old)
+        swapped = F.concat(F.lit(new), F.substring(col, len(old) + 1, 1 << 20))
+        out = F.when(hit, swapped) if out is None else out.when(hit, swapped)
+    return col if out is None else out.otherwise(col)
+
+
 def expand_curie(col):
-    """Expand engine CURIEs (ng: / sem: / rdf: / ent:) to full URIs."""
-    out = col
-    for short, full in PREFIXES.items():
-        out = F.when(out.startswith(short),
-                     F.concat(F.lit(full), F.substring(out, len(short) + 1, 1 << 20))
-                     ).otherwise(out)
-    return out
+    """Expand engine CURIEs (ng: / sem: / rdf: / ent: ...) to full URIs."""
+    return _swap_prefix(col, list(PREFIXES.items()))
+
 
 PREFIX_HEADER = """@prefix sem: <http://semanticweb.cs.vu.nl/2009/11/sem/> .
 @prefix rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#> .
@@ -85,13 +100,7 @@ def write_ttl(triples: DataFrame, path: str) -> None:
 
 def compact_curie(col):
     """Inverse of :func:`expand_curie`: full URIs back to engine CURIEs."""
-    out = col
-    for short, full in PREFIXES.items():
-        out = F.when(
-            out.startswith(full),
-            F.concat(F.lit(short), F.substring(out, len(full) + 1, 1 << 20)),
-        ).otherwise(out)
-    return out
+    return _swap_prefix(col, [(full, short) for short, full in PREFIXES.items()])
 
 
 TTL_LINE_RE = (

@@ -46,6 +46,12 @@ def discard_by_date(
     A node is discarded iff: its end-date < window.start, or its start-date
     > window.end, or a point-in-time falls outside the window.
     """
+    return _date_nodes(type_date, cfg, dates).dropDuplicates()
+
+
+def _date_nodes(
+    type_date: DataFrame, cfg: FilteringConfig, dates: tuple[str, str]
+) -> DataFrame:
     lo, hi = dates
     date_df = type_date.filter(F.col("predicate").isin(cfg.temporal))
     cond = (
@@ -54,7 +60,7 @@ def discard_by_date(
         | (F.col("predicate").isin(cfg.point_in_time) & (F.col("object") < lo))
         | (F.col("predicate").isin(cfg.point_in_time) & (F.col("object") > hi))
     )
-    return date_df.filter(cond).select(F.col("subject").alias("node")).dropDuplicates()
+    return date_df.filter(cond).select(F.col("subject").alias("node"))
 
 
 def discard_by_regex(
@@ -66,6 +72,12 @@ def discard_by_regex(
     outgoing.object); default to the window-start year when absent; discard
     if outside [start_year, end_year] (lexical compare on 4-digit strings).
     """
+    return _regex_nodes(ingoing, outgoing, dates).dropDuplicates()
+
+
+def _regex_nodes(
+    ingoing: DataFrame, outgoing: DataFrame, dates: tuple[str, str]
+) -> DataFrame:
     lo_y, hi_y = dates[0][:4], dates[1][:4]
 
     def side(df: DataFrame, col: str) -> DataFrame:
@@ -79,18 +91,18 @@ def discard_by_regex(
             .select(F.col(col).alias("node"))
         )
 
-    return side(ingoing, "subject").unionByName(
-        side(outgoing, "object")
-    ).dropDuplicates()
+    return side(ingoing, "subject").unionByName(side(outgoing, "object"))
 
 
 def discard_by_entity_type(type_date: DataFrame, type_uris: list[str]) -> DataFrame:
     """F7 — entity-type discard (filtering.py:99-110): nodes typed with any
     of `type_uris` (places for WHERE, people for WHO)."""
-    return (
-        type_date.filter(F.col("object").isin(type_uris))
-        .select(F.col("subject").alias("node"))
-        .dropDuplicates()
+    return _typed_nodes(type_date, type_uris).dropDuplicates()
+
+
+def _typed_nodes(type_date: DataFrame, type_uris: list[str]) -> DataFrame:
+    return type_date.filter(F.col("object").isin(type_uris)).select(
+        F.col("subject").alias("node")
     )
 
 
@@ -101,21 +113,24 @@ def compute_discards(
     cfg: FilteringConfig,
     dates: tuple[str, str] | None,
 ) -> DataFrame:
-    """Full Filtering.__call__ (filtering.py:112-138): union of active filters."""
+    """Full Filtering.__call__ (filtering.py:112-138): union of active filters.
+
+    A node may be listed more than once: the table is only ever anti-joined
+    against, and deduplicating it would cost a shuffle."""
     spark = type_date.sparkSession
     parts: list[DataFrame] = []
     if cfg.where and cfg.places:
-        parts.append(discard_by_entity_type(type_date, cfg.places))
+        parts.append(_typed_nodes(type_date, cfg.places))
     if cfg.who and cfg.people:
-        parts.append(discard_by_entity_type(type_date, cfg.people))
+        parts.append(_typed_nodes(type_date, cfg.people))
     if dates:
         if cfg.when and cfg.temporal:
-            parts.append(discard_by_date(type_date, cfg, dates))
+            parts.append(_date_nodes(type_date, cfg, dates))
         if cfg.when and cfg.dataset_type in ("dbpedia", "generic"):
-            parts.append(discard_by_regex(ingoing, outgoing, dates))
+            parts.append(_regex_nodes(ingoing, outgoing, dates))
     if not parts:
         return spark.createDataFrame([], "node string")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.dropDuplicates()
+    return out

@@ -26,13 +26,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def occurrence_delta(
+def occurrence_keys(
     pending: DataFrame,
     direction: str,
     target_types: list[str],
     mode: str = "pred_object",
 ) -> DataFrame:
-    """pending (with superclass col) -> occurrence delta rows.
+    """pending (with superclass col) -> one path-key row per pending row.
 
     mode='pred' keys on predicate only; 'pred_object' adds the endpoint
     (object for ingoing, subject for outgoing — framework.py:590-596).
@@ -42,27 +42,25 @@ def occurrence_delta(
         F.lit(3)
     )
     if mode == "pred":
-        keyed = pending.select(
+        return pending.select(
             priority.alias("priority"),
             F.lit(None).cast("string").alias("direction"),
             F.col("predicate"),
             F.lit(None).cast("string").alias("endpoint"),
         )
-    else:
-        endpoint = F.col("object") if direction == "ingoing" else F.col("subject")
-        keyed = pending.select(
-            priority.alias("priority"),
-            F.lit(direction).alias("direction"),
-            F.col("predicate"),
-            endpoint.alias("endpoint"),
-        )
-    return keyed.groupBy("priority", "direction", "predicate", "endpoint").agg(
-        F.count("*").alias("count")
+    endpoint = F.col("object") if direction == "ingoing" else F.col("subject")
+    return pending.select(
+        priority.alias("priority"),
+        F.lit(direction).alias("direction"),
+        F.col("predicate"),
+        endpoint.alias("endpoint"),
     )
 
 
 def merge_occurrences(cumulative: DataFrame | None, delta: DataFrame) -> DataFrame:
-    """Re-aggregate cumulative + delta (map-side combine keeps this narrow)."""
+    """Re-aggregate cumulative + delta (map-side combine keeps this narrow).
+    `delta` may hold several rows per path key (e.g. occurrence_keys rows
+    with count 1): the one aggregation sums them all."""
     if cumulative is None:
         return delta
     return (
@@ -91,6 +89,9 @@ def _tie_break():
     ]
 
 
+OCC_COLUMNS = ("priority", "direction", "predicate", "endpoint", "count")
+
+
 def rank_top1(
     occ: DataFrame,
     type_ranking: str = "entropy_pred_object_freq",
@@ -100,46 +101,44 @@ def rank_top1(
     """Pick the next path to expand. Returns a Row(priority, direction,
     predicate, endpoint, count, score) or None when no candidates exist.
 
-    The occurrence table is tiny (distinct path keys), so the agg/sort here
-    is negligible next to the expansion joins — but all steps remain
-    DataFrame ops for arbitrary scale.
+    One Spark action. The occurrence table is tiny (distinct path keys), so
+    it is read as one partition; the per-priority entropy total and band
+    fallback are windows partitioned by priority over that partition (no
+    exchange), and sorting by priority first restricts the pick to the best
+    priority class. Every step remains a DataFrame op, for arbitrary scale.
     """
     if occ is None:
         return None
-    best_priority = occ.agg(F.min("priority")).first()[0]
-    if best_priority is None:
-        return None
-    cand = occ.filter(F.col("priority") == best_priority)
-
-    if "entropy" in type_ranking:
-        tot = cand.agg(F.sum("count")).first()[0]
-        scored = cand.withColumn(
-            "score",
-            -(F.col("count") / F.lit(float(tot)))
-            * F.log(F.col("count") / F.lit(float(tot))),
-        )
-        row = scored.orderBy(F.desc("score"), *_tie_break()).limit(1).first()
-        return row
-    if "inverse" in type_ranking:
-        row = (
-            cand.withColumn("score", F.col("count").cast("double"))
-            .orderBy(F.asc("count"), *_tie_break())
-            .limit(1)
-            .first()
-        )
-        return row
-    # plain frequency: band filter with fallback (ranker.py:43-51)
-    banded = cand.filter(
-        (F.col("count") > low_threshold) & (F.col("count") < high_threshold)
+    per_class = Window.partitionBy("priority")
+    cand = (
+        occ.select(*OCC_COLUMNS)
+        .filter(F.col("priority").isNotNull())
+        .coalesce(1)
     )
-    use = banded if banded.limit(1).count() > 0 else cand
-    row = (
-        use.withColumn("score", F.col("count").cast("double"))
-        .orderBy(F.desc("count"), *_tie_break())
+    if "entropy" in type_ranking:
+        share = F.col("count") / F.sum("count").over(per_class)
+        scored = cand.withColumn("score", -share * F.log(share))
+        order = [F.desc("score")]
+    elif "inverse" in type_ranking:
+        scored = cand.withColumn("score", F.col("count").cast("double"))
+        order = [F.asc("count")]
+    else:
+        # plain frequency: band filter with fallback to the unfiltered
+        # class when its band is empty (ranker.py:43-51)
+        in_band = (F.col("count") > low_threshold) & (F.col("count") < high_threshold)
+        scored = (
+            cand.withColumn("_in_band", in_band.cast("int"))
+            .withColumn("_class_in_band", F.max("_in_band").over(per_class))
+            .filter((F.col("_in_band") == 1) | (F.col("_class_in_band") == 0))
+            .withColumn("score", F.col("count").cast("double"))
+        )
+        order = [F.desc("count")]
+    return (
+        scored.orderBy(F.asc("priority"), *order, *_tie_break())
+        .select(*OCC_COLUMNS, "score")
         .limit(1)
         .first()
     )
-    return row
 
 
 def rank_movers(

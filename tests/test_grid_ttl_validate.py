@@ -112,6 +112,67 @@ def test_ttl_roundtrip(spark, tmp_path):
     assert got == orig
 
 
+# Every CURIE prefix, full URIs, a prefix-lookalike, bare prefixes, dates and
+# escaped literals; GOLDEN_TTL_LINES are the lines the nested (3^n-node)
+# expand_curie rendered for it, kept as the byte-exact reference.
+MIXED_PREFIX_TRIPLES = [
+    ("sem:e1", "rdf:type", "sem:Event"),
+    ("ng:turn/1", "ng:next", "ng:turn/2"),
+    ("ent:Paris", "sem:hasPlace", "ent:France"),
+    ("wsj:doc_7", "nif:anchorOf", 'say "hi"\\now'),
+    ("frame:Arrest", "skos:broader", "gfe:Agent"),
+    ("nif:ctx", "rdf:value", "line1\nline2\r"),
+    ("ng:e2", "sem:hasTimeStamp", "1789-07-14"),
+    ("http://example.org/x", "http://example.org/p", "http://example.org/y"),
+    ("ngx:notaprefix", "sem:", "sem:"),
+    ("ent:", "rdf:label", "plain text"),
+    ("skos:c", "frame:rel", "wsj:"),
+]
+GOLDEN_TTL_LINES = [
+    '<http://chronographer-spark.local/ent/> <http://www.w3.org/1999/02/22-rdf-syntax-ns#label> "plain text" .',
+    "<http://chronographer-spark.local/ent/Paris> <http://semanticweb.cs.vu.nl/2009/11/sem/hasPlace> <http://chronographer-spark.local/ent/France> .",
+    '<http://chronographer-spark.local/ng/e2> <http://semanticweb.cs.vu.nl/2009/11/sem/hasTimeStamp> "1789-07-14"^^<http://www.w3.org/2001/XMLSchema#date> .',
+    "<http://chronographer-spark.local/ng/turn/1> <http://chronographer-spark.local/ng/next> <http://chronographer-spark.local/ng/turn/2> .",
+    "<http://example.org/x> <http://example.org/p> <http://example.org/y> .",
+    '<http://persistence.uni-leipzig.org/nlp2rdf/ontologies/nif-core#ctx> <http://www.w3.org/1999/02/22-rdf-syntax-ns#value> "line1\\nline2\\r" .',
+    "<http://semanticweb.cs.vu.nl/2009/11/sem/e1> <http://www.w3.org/1999/02/22-rdf-syntax-ns#type> <http://semanticweb.cs.vu.nl/2009/11/sem/Event> .",
+    "<http://www.w3.org/2004/02/skos/core#c> <https://w3id.org/framester/data/framesterabox/rel> <https://w3id.org/framester/wsj/> .",
+    "<https://w3id.org/framester/data/framesterabox/Arrest> <http://www.w3.org/2004/02/skos/core#broader> <https://w3id.org/framester/framenet/abox/gfe/Agent> .",
+    '<https://w3id.org/framester/wsj/doc_7> <http://persistence.uni-leipzig.org/nlp2rdf/ontologies/nif-core#anchorOf> "say \\"hi\\"\\\\now" .',
+    "<ngx:notaprefix> <http://semanticweb.cs.vu.nl/2009/11/sem/> <http://semanticweb.cs.vu.nl/2009/11/sem/> .",
+]
+
+
+def test_ttl_lines_byte_identical_mixed_prefixes(spark):
+    from chronographer_spark.io.ttl import to_ttl_lines
+    from chronographer_spark.vocab import PREFIXES
+
+    # the fixture exercises every declared prefix
+    used = {t.split(":")[0] + ":" for row in MIXED_PREFIX_TRIPLES for t in row}
+    assert set(PREFIXES) <= used
+    triples = spark.createDataFrame(
+        MIXED_PREFIX_TRIPLES, "subject string, predicate string, object string"
+    )
+    got = sorted(r.line for r in to_ttl_lines(triples).collect())
+    assert got == GOLDEN_TTL_LINES
+
+
+def test_curie_case_expression_linear_in_prefixes(spark):
+    """The CURIE rewrite is one flat CASE: the input column appears twice
+    per prefix (test + substring) plus once in the ELSE branch, so the
+    expression grows linearly (the chained form read the previous CASE
+    three times per prefix: 3^n)."""
+    from chronographer_spark.io.ttl import _swap_prefix, compact_curie, expand_curie
+    from chronographer_spark.vocab import PREFIXES
+
+    pairs = list(PREFIXES.items())
+    for n in range(len(pairs) + 1):
+        expr = str(_swap_prefix(F.col("curie_in"), pairs[:n]))
+        assert expr.count("curie_in") == 2 * n + 1, n
+    for fn in (expand_curie, compact_curie):
+        assert str(fn(F.col("curie_in"))).count("curie_in") == 2 * len(pairs) + 1
+
+
 def test_versioned_catalog_snapshots(spark, tmp_path):
     """Snapshot isolation semantics of the Iceberg-shaped shim: immutable
     versions, time-travel reads, copy-on-write append, rollback."""

@@ -233,7 +233,7 @@ def _vocab(spark):
     return pred_domain, pred_range, superclasses
 
 
-def _search(spark, ckpt, run_id, iterations=3):
+def _search(spark, ckpt, run_id, iterations=3, cls=None):
     from chronographer_spark.search.driver import GraphSearch, SearchConfig
 
     pred_domain, pred_range, superclasses = _vocab(spark)
@@ -253,7 +253,7 @@ def _search(spark, ckpt, run_id, iterations=3):
         people=[EX + "class/Person"],
         dataset_type="dbpedia",
     )
-    return GraphSearch(
+    return (cls or GraphSearch)(
         spark, _kg(spark), cfg, filt,
         pred_domain=pred_domain, pred_range=pred_range, superclasses=superclasses,
         checkpoint_dir=ckpt, run_id=run_id,
@@ -310,3 +310,119 @@ def test_checkpoint_lineage_columns(spark, tmp_path):
     df = spark.read.parquet(f"{gs._iter_dir(last)}/subgraph")
     assert {"lineage_run_id", "lineage_iteration"} <= set(df.columns)
     assert df.filter(F.col("lineage_run_id") != "t4").count() == 0
+
+
+# --- job economy: jobs per iteration, observed row counts, no cache growth --
+
+# A steady-state iteration (expansion, filtering, ranking, five checkpoint
+# writes, reload) spends 21 jobs on this KG; it spent ~100 when every
+# consumer re-executed the lazy lineage. Raise only with a reason.
+ITERATION_JOB_BUDGET = 24
+
+
+@pytest.fixture(scope="module")
+def economy_run(spark, tmp_path_factory):
+    """One 4-iteration search whose iteration N runs its jobs (its
+    checkpoint write and reload included) in job group f"{prefix}-{N}", and
+    which records the cached plans / persisted RDDs held when each
+    iteration starts (the previous one is written and released by then)."""
+    import uuid
+
+    from chronographer_spark.search.driver import GraphSearch
+
+    prefix = f"search-jobs-{uuid.uuid4().hex}"
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc
+    held = {}
+
+    class Recorded(GraphSearch):
+        def run_one_iteration(self, iteration, state):
+            held[iteration] = (
+                cache_manager.numCachedEntries(),
+                jsc.getPersistentRDDs().size(),
+            )
+            self.spark.sparkContext.setJobGroup(f"{prefix}-{iteration}", "search iteration")
+            return super().run_one_iteration(iteration, state)
+
+    ckpt = str(tmp_path_factory.mktemp("economy"))
+    gs = _search(spark, ckpt, "economy", iterations=4, cls=Recorded)
+    try:
+        gs.run()
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert gs.last_complete_iteration() == 4
+    return gs, prefix, held
+
+
+def test_search_iteration_job_budget(spark, economy_run):
+    _, prefix, _ = economy_run
+    tracker = spark.sparkContext.statusTracker()
+    jobs = len(tracker.getJobIdsForGroup(f"{prefix}-2"))
+    assert 0 < jobs <= ITERATION_JOB_BUDGET, jobs
+
+
+def test_checkpoint_meta_rows_match_tables(spark, economy_run):
+    """_meta.json rows come from Observations on the writes, not from a
+    read-back count: they must still equal the tables as written."""
+    import json
+    import os
+
+    from chronographer_spark.search.driver import STATE_TABLES
+
+    gs, _, _ = economy_run
+    for it in range(1, gs.last_complete_iteration() + 1):
+        d = gs._iter_dir(it)
+        with open(os.path.join(d, "_meta.json"), encoding="utf-8") as fh:
+            rows = json.load(fh)["rows"]
+        assert set(rows) == set(STATE_TABLES)
+        for t in STATE_TABLES:
+            assert rows[t] == spark.read.parquet(os.path.join(d, t)).count(), (it, t)
+
+
+def test_search_cache_does_not_grow_with_iterations(economy_run):
+    """Every table an iteration materializes is released once its
+    checkpoint is written: iteration 4 starts with no more cached plans or
+    persisted RDDs than iteration 2 did."""
+    _, _, held = economy_run
+    (cached_2, rdds_2), (cached_4, rdds_4) = held[2], held[4]
+    assert cached_4 == cached_2
+    # persisted RDDs are weakly held, so unrelated ones may vanish in between
+    assert rdds_4 <= rdds_2
+
+
+def test_gold_metrics_one_pass_match_separate_counts(spark, economy_run):
+    gs, _, _ = economy_run
+    gs.gold = spark.createDataFrame(
+        [(EX + "Storming",), (EX + "Vainqueurs",), (EX + "Storming",), (EX + "Missing",)],
+        "event string",
+    )
+    state = gs.final_state()
+    found = gs.found_events(state)
+    g = gs.gold.dropDuplicates()
+    expected = (
+        found.join(g, "event", "inner").count(),
+        found.join(g, "event", "left_anti").count(),
+        g.join(found, "event", "left_anti").count(),
+    )
+    assert expected[0] == 2 and expected[2] == 1
+    m = gs._metrics(state)
+    assert (m["tp"], m["fp"], m["fn"]) == expected
+
+
+@pytest.mark.parametrize("strategy", ["pred_freq", "entropy_pred_object_freq", "inverse_pred_freq"])
+def test_rank_top1_is_one_job(spark, strategy):
+    import uuid
+
+    # several partitions, no shuffle: the table as the search materializes it
+    rows = [(3, "ingoing", "p", "x", 150), (1, "ingoing", "a", "x", 300),
+            (1, "outgoing", "b", "y", 50), (1, "ingoing", "c", "x", 1)]
+    occ = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), OCC_SCHEMA)
+    group = f"rank-{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "rank_top1")
+    try:
+        row = rank_top1(occ, strategy)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert row["priority"] == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
