@@ -2495,21 +2495,18 @@ def q_daily_append_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     turn 4 per conversation is the checkpointed bridge tail; delta
     triples build over (bridge + batch) ONLY (no history scan), the
     nextEvent delta feeds incremental_components against the prior
-    history labeling (window strategy + precontraction), and the output
-    is the MERGE-sized delta emit joined with per-event delta triple
-    counts. The oracle replays the triple emission via the flagship SQL
-    restricted by the identical delta rule and labels every batch event
-    with its conversation head."""
-    from chronographer_spark.graph.materialize import build_event_graph
+    history labeling (precontracted), and the output is the MERGE-sized
+    delta emit joined with per-event delta triple counts. The oracle
+    replays the triple emission via the flagship SQL restricted by the
+    identical delta rule and labels every batch event with its
+    conversation head."""
+    from chronographer_spark.graph.materialize import build_event_graph, event_uri_col
     from chronographer_spark.linking.canonicalize import (
         connected_components,
         incremental_components,
     )
-    from chronographer_spark.pipeline_append import (
-        NEXT_EVENT,
-        delta_triples,
-        event_uri,
-    )
+    from chronographer_spark.pipeline_append import delta_triples
+    from chronographer_spark.vocab import NEXT_EVENT
 
     tx = transcripts_from_events(spark, sf_dir).localCheckpoint(eager=True)
     cut = 5
@@ -2524,9 +2521,9 @@ def q_daily_append_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist_edges = hist_graph.filter(F.col("predicate") == NEXT_EVENT).select(
         F.col("subject").alias("src"), F.col("object").alias("dst")
     )
-    hist_nodes = hist.select(event_uri().alias("node")).distinct()
+    hist_nodes = hist.select(event_uri_col().alias("node")).distinct()
     prior = connected_components(
-        hist_edges, all_nodes=hist_nodes, strategy="window", precontract=True
+        hist_edges, all_nodes=hist_nodes, precontract=True
     ).localCheckpoint(eager=True)
     out = incremental_components(prior, edges, emit="delta")
     counts = delta.groupBy("subject").agg(

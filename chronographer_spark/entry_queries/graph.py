@@ -54,13 +54,10 @@ def q_cc_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("c_custkey").alias("src"), F.col("nxt").alias("dst"))
     )
     singletons = cust.select(F.col("c_custkey").alias("node"))
-    # chain fixture = bounded degree, no hubs, high diameter -> window
-    # strategy (1-exchange rounds) + per-partition union-find precontraction
-    # (collapses in-partition chain segments; ~2-4x measured at sf0.1);
-    # hub-skewed alias graphs use the default "agg" without precontract
-    cc = connected_components(
-        edges, all_nodes=singletons, strategy="window", precontract=True
-    )
+    # chain fixture = high diameter -> per-partition union-find
+    # precontraction (collapses in-partition chain segments; ~2-4x measured
+    # at sf0.1)
+    cc = connected_components(edges, all_nodes=singletons, precontract=True)
     return cc.select("node", "component").withColumnRenamed("component", "canonical")
 
 CC_SQL = """
@@ -644,7 +641,7 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
     nodes = docs.select(F.col("doc_id").alias("node"))
-    cc = connected_components(edges, all_nodes=nodes, strategy="window")
+    cc = connected_components(edges, all_nodes=nodes)
     return cc.select(F.col("node").alias("doc_id"), F.col("component").alias("cluster"))
 
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1468,7 +1465,7 @@ def q_fuzzy_canonical_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("tok1").alias("src"), F.col("tok2").alias("dst")
     )
     nodes = vocab.select(F.col("tok").alias("node"))
-    cc = connected_components(edges, all_nodes=nodes, strategy="window")
+    cc = connected_components(edges, all_nodes=nodes)
     return cc.select(F.col("node").alias("tok"), F.col("component").alias("canonical"))
 
 FUZZY_CANONICAL_SQL = """
@@ -3208,11 +3205,11 @@ FROM ue LEFT JOIN wedges w ON w.ua = ue.u AND w.ub = ue.v
 
 
 def q_cc_canonical_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """cc_canonical's chain fixture under the OTHER strategy (agg + AQE,
-    no precontraction) — the hub-safe default for unknown degree
-    distributions (soak_skew.py: agg holds to 1e5-degree hubs). Same
-    oracle as cc_canonical: the gate certifies both strategies emit
-    identical components."""
+    """cc_canonical's chain fixture WITHOUT precontraction: the star
+    rounds alone. (The key keeps its name from when it ran the
+    groupBy + self-join rounds, since removed.) Same oracle as
+    cc_canonical: the gate certifies that precontraction leaves the
+    components unchanged."""
     from chronographer_spark.linking.canonicalize import connected_components
 
     cust = _t(spark, sf_dir, "customer")
@@ -3223,9 +3220,7 @@ def q_cc_canonical_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("c_custkey").alias("src"), F.col("nxt").alias("dst"))
     )
     singletons = cust.select(F.col("c_custkey").alias("node"))
-    cc = connected_components(
-        edges, all_nodes=singletons, strategy="agg", precontract=False
-    )
+    cc = connected_components(edges, all_nodes=singletons)
     return cc.select("node", "component").withColumnRenamed(
         "component", "canonical"
     )

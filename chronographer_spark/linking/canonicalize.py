@@ -7,21 +7,25 @@ At 10^12-turn scale the alias graph does not fit a dict: we compute connected
 components over alias edges with the alternating large-star/small-star
 algorithm (Kiveris et al., "Connected Components in MapReduce and Beyond",
 SOCC 2014 — the same algorithm behind GraphFrames' CC), expressed purely as
-DataFrame self-joins + aggregations.
+DataFrame window passes.
 
-Skew: hub entities (an alias cluster of millions) concentrate a single
-groupBy key. The iteration keys every aggregation by node id, so AQE's
-skew-join splitting handles the join side; `min` partial aggregation
-(map-side combine) bounds the shuffle for the agg side. Convergence is
-O(log^2 n) rounds even for path graphs; each round is checkpointed to cut
-lineage (SURVEY.md §7.4).
+Skew: each star round computes the per-node minimum with a window over
+one exchange, so a hub entity's whole neighbor list lands in one task.
+The repo's Zipf-hub soak (scripts/soak_skew.py, BENCH/BASELINE.md) still
+measured these rounds faster than groupBy + self-join rounds at 1e4- and
+1e5-degree hubs: a round costs per-job latency long before a hub's
+partition costs CPU. Convergence is O(log^2 n) rounds even for path
+graphs; each round is checkpointed to cut lineage (SURVEY.md §7.4).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+# star rounds before the loop gives up (O(log^2 n) rounds converge far below)
+MAX_ITER = 50
 
 
 def _dedup(edges: DataFrame) -> DataFrame:
@@ -36,49 +40,13 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """For each node u: connect every strictly-larger neighbor to
-    min(N(u) + {u}).
+    min(N(u) + {u}), the minimum taken by a window over one exchange.
 
     Contract: `edges` arrives oriented (src > dst) and deduplicated — true
     for the loop input and every `_small_star` output — so symmetrizing
     cannot create duplicates and no dedup shuffle is needed here; the output
     may carry duplicates, which the consumer (`_small_star`) removes in the
-    orientation dedup it performs anyway. Saves 2 shuffles per round."""
-    sym = _symmetrize(edges)
-    mins = sym.groupBy("src").agg(F.min("dst").alias("mn"))
-    mins = mins.withColumn("m", F.least(F.col("mn"), F.col("src"))).select("src", "m")
-    return (
-        sym.filter(F.col("dst") > F.col("src"))
-        .join(mins, "src")
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Orient edges (larger -> smaller); connect all smaller neighbors + self
-    to the minimum."""
-    oriented = _dedup(
-        edges.select(
-            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-        )
-    )
-    mins = oriented.groupBy("src").agg(F.min("dst").alias("m"))
-    nbrs = oriented.join(mins, "src").select(F.col("dst").alias("v"), "m")
-    selfs = mins.select(F.col("src").alias("v"), "m")
-    out = (
-        nbrs.unionByName(selfs)
-        .filter(F.col("v") != F.col("m"))
-        .select(F.col("v").alias("src"), F.col("m").alias("dst"))
-    )
-    return _dedup(out)
-
-
-def _large_star_window(edges: DataFrame) -> DataFrame:
-    """`_large_star` with the per-node min computed as a window over one
-    exchange instead of groupBy + self-join (3 exchanges -> 1). Same output.
-
-    Trade-off: the window puts a node's whole neighbor list in one partition
-    — wrong for hub nodes (a 10M-alias entity serializes one task), right
-    for bounded-degree graphs where per-round latency dominates."""
+    dedup it performs anyway."""
     sym = _symmetrize(edges)
     w = Window.partitionBy("src")
     return (
@@ -88,9 +56,10 @@ def _large_star_window(edges: DataFrame) -> DataFrame:
     )
 
 
-def _small_star_window(edges: DataFrame) -> DataFrame:
-    """`_small_star` via one window pass: emit (neighbor -> min) and
-    (self -> min) from the same partition, dedup once at the end."""
+def _small_star(edges: DataFrame) -> DataFrame:
+    """Orient edges (larger -> smaller); connect all smaller neighbors + self
+    to the minimum: one window pass emits (neighbor -> min) and
+    (self -> min) from the same partition, deduplicated once at the end."""
     oriented = edges.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     )
@@ -101,6 +70,19 @@ def _small_star_window(edges: DataFrame) -> DataFrame:
         F.col("m").alias("dst"),
     ).filter(F.col("src") != F.col("dst"))
     return _dedup(out)
+
+
+def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple]:
+    """Materialize `edges` (one action, lineage cut) and return it with its
+    fingerprint — row count and xor of row hashes — observed on the way."""
+    obs = Observation()
+    edges = edges.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64("src", "dst")).alias("h"),  # overflow-free
+    ).localCheckpoint(eager=True)
+    m = obs.get
+    return edges, (m["n"], m["h"])
 
 
 def precontract_edges(edges: DataFrame) -> DataFrame:
@@ -155,57 +137,37 @@ def precontract_edges(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     all_nodes: DataFrame | None = None,
-    max_iter: int = 50,
-    strategy: str = "agg",
     precontract: bool = False,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id.
 
     `all_nodes(node)` optionally adds isolated nodes (component = themselves).
 
-    `strategy`: "agg" (default) computes per-node minima with
-    groupBy + self-join — map-side partial aggregation and AQE skew-join
-    keep hub entities from serializing a task; "window" computes them with
-    one-exchange window passes — ~2x fewer stages per round, the right
-    choice when the alias graph's degree is bounded (no hub entities), e.g.
-    redirect chains. Both produce identical components.
-
     `precontract=True` runs :func:`precontract_edges` first — per-partition
     union-find collapses local paths before the global loop; the right call
-    for high-diameter graphs (chains), costing one Arrow pass."""
+    for high-diameter graphs (chains) whose partitions hold whole
+    components, costing one Arrow pass."""
     if precontract:
         edges = precontract_edges(edges)
-    cur = _dedup(
-        edges.select(
-            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
+    cur, sig = _checkpoint(
+        _dedup(
+            edges.select(
+                F.greatest("src", "dst").alias("src"),
+                F.least("src", "dst").alias("dst"),
+            )
         )
-    ).localCheckpoint(eager=True)
-
-    def _sig(df: DataFrame) -> tuple:
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),  # overflow-free
-        ).first()
-        return (r["n"], r["h"])
-
-    large = _large_star_window if strategy == "window" else _large_star
-    small = _small_star_window if strategy == "window" else _small_star
-
-    prev_sig = _sig(cur)
-    for _ in range(max_iter):
-        nxt = small(large(cur)).localCheckpoint(eager=True)
-        # cheap per-round fingerprint (one map-side-combined agg) instead of
-        # two exceptAll shuffle-joins; on a fingerprint hit, confirm exactly
-        # once — the loop is deterministic either way
-        sig = _sig(nxt)
-        if sig == prev_sig and (
+    )
+    for _ in range(MAX_ITER):
+        nxt, nxt_sig = _checkpoint(_small_star(_large_star(cur)))
+        # the fingerprint rides on the round's checkpoint; on a hit,
+        # confirm exactly once — the loop is deterministic either way
+        if nxt_sig == sig and (
             nxt.exceptAll(cur).limit(1).count() == 0
             and cur.exceptAll(nxt).limit(1).count() == 0
         ):
             cur = nxt
             break
-        prev_sig = sig
-        cur = nxt
+        cur, sig = nxt, nxt_sig
 
     # after convergence edges form stars (node -> root)
     comp = cur.groupBy("src").agg(F.min("dst").alias("component")).select(
@@ -252,9 +214,6 @@ def apply_referents(df: DataFrame, referents: DataFrame, col: str) -> DataFrame:
 def incremental_components(
     prior: DataFrame,
     new_edges: DataFrame,
-    strategy: str = "agg",
-    precontract: bool = False,
-    max_iter: int = 50,
     emit: str = "full",
 ) -> DataFrame:
     """Incremental connected-components maintenance: fold a NEW batch of
@@ -316,9 +275,6 @@ def incremental_components(
     delta = connected_components(
         contracted.filter(F.col("src") != F.col("dst")),
         all_nodes=reps,
-        strategy=strategy,
-        precontract=precontract,
-        max_iter=max_iter,
     )
     changed = delta.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("component"), F.col("component").alias("__new")

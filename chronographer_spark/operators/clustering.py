@@ -286,7 +286,6 @@ def dbscan_grid(
         all_nodes=core.select(
             F.concat_ws("|", "ccx", "ccy").alias("node")
         ).distinct(),
-        strategy="window",
     )
     comp = core.join(
         cc_cells.select(
@@ -357,7 +356,7 @@ def clustering_agreement(
     the exact staged quotient (num DIV den)·1e6 + (num % den)·1e6 DIV den
     — identical to the direct 128-bit value for either sign because both
     engines truncate toward zero. Overflow bound: (num % den)·1e6 <
-    den·1e6 ≤ n⁴/4·1e6 must stay under ~1e38 → n ≤ ~4·10⁸ rows per
+    den·1e6 ≤ n⁴/4·1e6 must stay under ~1e38 → n ≤ ~1.4·10⁸ rows per
     evaluation (was ~55k with BIGINT products); past that, pre-aggregate
     to a bounded contingency input.
 

@@ -274,9 +274,7 @@ def near_dup_clusters_exact_first(
     )
     near_edges = rep_pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     nodes = df.select(F.col(id_col).alias("node"))
-    cc = connected_components(
-        exact_edges.unionByName(near_edges), all_nodes=nodes, strategy="window"
-    )
+    cc = connected_components(exact_edges.unionByName(near_edges), all_nodes=nodes)
     return cc.select(F.col("node").alias(id_col), F.col("component").alias("cluster"))
 
 

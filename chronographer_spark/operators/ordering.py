@@ -24,14 +24,15 @@ def build_pred_closure(
     pred_classes: DataFrame, superclasses: DataFrame
 ) -> DataFrame:
     """(predicate, classes arr) x (class, ancestors arr)
-    -> (predicate, superclass arr) with ancestors flattened per predicate."""
+    -> (predicate, superclass arr) with ancestors flattened per predicate,
+    sorted so the array does not depend on shuffle order."""
     exploded = pred_classes.select("predicate", F.explode("classes").alias("cls"))
     sup = superclasses.select(
         F.col("class").alias("cls"), F.explode("ancestors").alias("anc")
     )
     joined = exploded.join(sup, "cls", "inner").select("predicate", "anc")
     return joined.groupBy("predicate").agg(
-        F.array_distinct(F.collect_list("anc")).alias("superclass")
+        F.array_sort(F.array_distinct(F.collect_list("anc"))).alias("superclass")
     )
 
 

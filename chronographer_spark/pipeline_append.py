@@ -33,17 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-NEXT_EVENT = "ng:nextEvent"
-HAS_SUB_EVENT = "sem:hasSubEvent"
-
-
-def event_uri(conv_col: str = "conv_id", turn_col: str = "turn_idx"):
-    return F.concat(
-        F.lit("ng:event/"),
-        F.col(conv_col),
-        F.lit("/"),
-        F.col(turn_col).cast("string"),
-    )
+from chronographer_spark.graph.materialize import event_uri_col
+from chronographer_spark.vocab import NEXT_EVENT, NF_TO_PRED
 
 
 def delta_triples(batch_tx: DataFrame, bridge_tx: DataFrame) -> DataFrame:
@@ -55,12 +46,12 @@ def delta_triples(batch_tx: DataFrame, bridge_tx: DataFrame) -> DataFrame:
     from chronographer_spark.graph.materialize import build_event_graph
 
     g = build_event_graph(bridge_tx.unionByName(batch_tx))
-    batch_ids = batch_tx.select(event_uri().alias("__b")).distinct()
+    batch_ids = batch_tx.select(event_uri_col().alias("__b")).distinct()
     by_subject = g.join(
         batch_ids, g["subject"] == F.col("__b"), "left_semi"
     )
     by_object = g.filter(
-        F.col("predicate").isin(HAS_SUB_EVENT, NEXT_EVENT)
+        F.col("predicate").isin(NF_TO_PRED["part_of_inverse"], NEXT_EVENT)
     ).join(batch_ids, g["object"] == F.col("__b"), "left_semi")
     # a batch-subject nextEvent row is caught by BOTH rules — distinct
     # keeps the delta a set, as the oracle's WHERE-OR does
@@ -77,7 +68,7 @@ def daily_append(
     edges_table: str = "order_edges",
     ranks_table: str = "event_ranks",
     triples_table: str = "triples",
-    pr_iterations: int = 20,
+    pr_iterations: int = 100,
     pr_tol: float | None = 1e-4,
 ) -> dict:
     """Run one daily append against a Catalog. Returns a summary dict
@@ -88,11 +79,14 @@ def daily_append(
       (bridge rows are one turn per touched conversation);
     - incremental CC: two passes over the prior labels (broadcast batch
       endpoint lookup + broadcast changed-rep relabel), the iterative
-      loop sees only the contracted delta (linking/canonicalize.py:252);
+      loop sees only the contracted delta
+      (linking/canonicalize.incremental_components);
       emit="delta" keeps the MERGE batch-sized;
     - warm-start PageRank: prior ranks seed the iteration, so the
       tol-criterion converges in rounds ~ log(perturbation)/log(1/d)
-      instead of a cold start's full count (graph_algos.pagerank);
+      instead of a cold start's full count (graph_algos.pagerank); the
+      default cap of 100 rounds sits above the ~50 a cold bootstrap needs
+      to reach the default tol, so a default-args run stops converged;
     - every write carries lineage columns and merges idempotently:
       triples/edges MERGE on (key, lineage_run_id) partition-pruned to
       this run's partition; labels MERGE on node; ranks rewrite via the
@@ -111,7 +105,7 @@ def daily_append(
         .select(F.col("subject").alias("src"), F.col("object").alias("dst"))
         .localCheckpoint(eager=True)
     )
-    batch_nodes = batch_tx.select(event_uri().alias("node")).distinct()
+    batch_nodes = batch_tx.select(event_uri_col().alias("node")).distinct()
 
     # -- incremental canonicalization over the temporal-order graph
     if catalog.exists(labels_table):
@@ -132,9 +126,7 @@ def daily_append(
             .unionByName(batch_nodes)
             .distinct()
         )
-        labels_delta = connected_components(
-            edges, all_nodes=nodes, strategy="window", precontract=True
-        )
+        labels_delta = connected_components(edges, all_nodes=nodes, precontract=True)
     labels_delta = labels_delta.localCheckpoint(eager=True)
     n_labels = labels_delta.count()
     catalog.merge_upsert(

@@ -118,7 +118,6 @@ class SearchConfig:
     target_types: list[str] = field(default_factory=list)
     predicate_filter: list[str] = field(default_factory=list)
     type_ranking: str = "entropy_pred_object_freq"
-    mode: str = "pred_object"  # occurrence keying; 'pred' for *_pred_freq
     dates: tuple[str, str] | None = None
     max_uri: int = 1000
     low_threshold: int = 1
@@ -136,6 +135,14 @@ class SearchConfig:
         "entropy_pred_object_freq",
     )
 
+    @property
+    def mode(self) -> str:
+        """Occurrence keying implied by `type_ranking`: 'pred' for the
+        *_pred_freq rankings, 'pred_object' otherwise."""
+        if self.type_ranking in ("pred_freq", "inverse_pred_freq", "entropy_pred_freq"):
+            return "pred"
+        return "pred_object"
+
     def validate(self) -> None:
         """Shape/type validation mirroring the reference's `_check_config`
         (framework.py:272-385, messages doc/check_config_framework.py:6):
@@ -149,16 +156,6 @@ class SearchConfig:
         if self.type_ranking not in self.RANKINGS:
             raise ValueError(
                 f"`type_ranking` must be one of {', '.join(self.RANKINGS)}"
-            )
-        expected_mode = (
-            "pred"
-            if self.type_ranking in ("pred_freq", "inverse_pred_freq", "entropy_pred_freq")
-            else "pred_object"
-        )
-        if self.mode != expected_mode:
-            raise ValueError(
-                f"`mode` {self.mode!r} inconsistent with type_ranking "
-                f"{self.type_ranking!r} (expected {expected_mode!r})"
             )
         if self.dates is not None:
             start_d, end_d = self.dates

@@ -32,9 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.filtering import FilteringConfig
 from .driver import GraphSearch, SearchConfig
 
-# mode is derived, not swept independently (SearchConfig.validate ties it)
-_PRED_MODES = {"pred_freq", "inverse_pred_freq", "entropy_pred_freq"}
-
 
 def expand_grid(base: SearchConfig, grid: dict[str, list]) -> list[tuple[str, SearchConfig]]:
     """Cartesian expansion of `grid` over `base` -> [(cell_id, config)].
@@ -45,10 +42,6 @@ def expand_grid(base: SearchConfig, grid: dict[str, list]) -> list[tuple[str, Se
     out = []
     for combo in itertools.product(*(grid[k] for k in keys)):
         params = dict(zip(keys, combo))
-        if "type_ranking" in params and "mode" not in params:
-            params["mode"] = (
-                "pred" if params["type_ranking"] in _PRED_MODES else "pred_object"
-            )
         cfg = replace(base, **params)
         cell_id = "_".join(
             f"{k}-{str(v).replace('/', '.')[:40]}" for k, v in sorted(params.items())

@@ -85,7 +85,7 @@ def main() -> None:
         pairs = minhash_dedup(docs, threshold=0.8, num_hashes=16, bands=4, shingle_n=3)
         edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         nodes = docs.select(F.col("doc_id").alias("node"))
-        return connected_components(edges, all_nodes=nodes, strategy="window").count()
+        return connected_components(edges, all_nodes=nodes).count()
 
     def job_near_dup_exact_first():
         # the production composition: collapse exact dups first, near-dup on

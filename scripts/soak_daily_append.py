@@ -129,9 +129,7 @@ def main() -> int:
             .unionByName(edges.select(F.col("dst").alias("node")))
             .distinct()
         )
-        cc = connected_components(
-            edges, all_nodes=nodes, strategy="window", precontract=True
-        )
+        cc = connected_components(edges, all_nodes=nodes, precontract=True)
         pr, pr_rounds_cold = pagerank(edges, iterations=45, tol=1e-3, return_iters=True)
         n_cc, n_pr = cc.count(), pr.count()
         full = time.monotonic() - t0

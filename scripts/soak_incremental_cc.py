@@ -10,8 +10,8 @@ every edge incident to a node divisible by --batch-mod), materializes the
 history labeling once (that is the STORED state an incremental pipeline
 loads, so its cost is excluded), then times:
 
-  full   connected_components over history ∪ batch (window+precontract,
-         the measured-best strategy for chains) — the recompute baseline
+  full   connected_components over history ∪ batch (precontracted, the
+         measured-best setting for chains) — the recompute baseline
   incr   incremental_components(prior, batch) — two passes over prior
          (broadcast endpoint lookup + map-only relabel) plus CC on the
          contracted delta graph only
@@ -90,7 +90,7 @@ def main() -> None:
     # stored state: the prior labeling (cost excluded — a real pipeline
     # loads this from the catalog)
     prior = connected_components(
-        hist, all_nodes=old_nodes, strategy="window", precontract=True
+        hist, all_nodes=old_nodes, precontract=True
     ).localCheckpoint(eager=True)
     full_edges = full.localCheckpoint(eager=True)
     batch_edges = batch.localCheckpoint(eager=True)
@@ -110,10 +110,7 @@ def main() -> None:
             t0 = time.time()
             if job == "full":
                 out = connected_components(
-                    full_edges,
-                    all_nodes=all_nodes,
-                    strategy="window",
-                    precontract=True,
+                    full_edges, all_nodes=all_nodes, precontract=True
                 )
             elif job == "incr":
                 out = incremental_components(prior, batch_edges)

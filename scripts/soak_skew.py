@@ -17,8 +17,8 @@ Scale knob: --hub H sets the hub alias count (1e4 = "10x", 1e5 = "100x" in
 the verdict's terms); n_entities = max(2000, H DIV 5) keeps a long tail.
 
 Jobs:
-  cc_agg / cc_window / cc_pre   connected_components strategies on the graph
-                                (agg, window, agg+precontract); correctness:
+  cc / cc_pre                   connected_components on the graph, without
+                                and with precontraction; correctness:
                                 n components == n entities, hub label checked
   canon                         canonical_dictionary (the production path)
   join_plain / join_salted      the canonicalization fact-to-dim join with
@@ -129,16 +129,11 @@ def main() -> None:
         assert r["max_n"] == hub + 1, (r["max_n"], hub)
         return int(r["n_comp"])
 
-    def job_cc_agg():
-        return _check_cc(connected_components(edges, strategy="agg"))
-
-    def job_cc_window():
-        return _check_cc(connected_components(edges, strategy="window"))
+    def job_cc():
+        return _check_cc(connected_components(edges))
 
     def job_cc_pre():
-        return _check_cc(
-            connected_components(edges, strategy="agg", precontract=True)
-        )
+        return _check_cc(connected_components(edges, precontract=True))
 
     def job_canon():
         d = canonical_dictionary(edges)
@@ -221,8 +216,7 @@ def main() -> None:
         assert r["k"] == n_ent
         return int(r["mx"])
 
-    run("cc_agg", job_cc_agg)
-    run("cc_window", job_cc_window)
+    run("cc", job_cc)
     run("cc_pre", job_cc_pre)
     run("canon", job_canon)
     run("join_plain", job_join_plain)

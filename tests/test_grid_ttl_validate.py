@@ -16,8 +16,6 @@ def test_search_config_validate_messages():
         SearchConfig(start="s", iterations=0).validate()
     with pytest.raises(ValueError, match="`type_ranking`"):
         SearchConfig(start="s", type_ranking="nope").validate()
-    with pytest.raises(ValueError, match="inconsistent"):
-        SearchConfig(start="s", type_ranking="pred_freq", mode="pred_object").validate()
     with pytest.raises(ValueError, match="ISO"):
         SearchConfig(start="s", dates=("1789", "1800-01-01")).validate()
     with pytest.raises(ValueError, match="start must be <="):
@@ -26,6 +24,43 @@ def test_search_config_validate_messages():
         SearchConfig(start="s", walk="drunk").validate()
     with pytest.raises(ValueError, match="`max_uri`"):
         SearchConfig(start="s", max_uri=0).validate()
+
+
+def test_pred_freq_config_keys_occurrences_by_predicate(spark, tmp_path):
+    """A *_pred_freq ranking needs no separate `mode`: the config validates
+    as given, and one search iteration keys its occurrences by predicate
+    only (null direction and endpoint)."""
+    from chronographer_spark.operators.filtering import FilteringConfig
+    from chronographer_spark.search.driver import GraphSearch
+    from tests.test_search_core import DBO_DATE, EX, _kg, _vocab
+
+    cfg = SearchConfig(
+        start=EX + "FrenchRev",
+        iterations=1,
+        target_types=[EX + "class/Event"],
+        type_ranking="pred_freq",
+        dates=("1789-01-01", "1800-12-31"),
+    )
+    cfg.validate()
+    assert cfg.mode == "pred"
+
+    pred_domain, pred_range, superclasses = _vocab(spark)
+    filt = FilteringConfig(
+        point_in_time=[DBO_DATE], start_dates=[], end_dates=[],
+        places=[EX + "class/Place"], people=[EX + "class/Person"],
+        dataset_type="dbpedia",
+    )
+    gs = GraphSearch(
+        spark, _kg(spark), cfg, filt,
+        pred_domain=pred_domain, pred_range=pred_range, superclasses=superclasses,
+        checkpoint_dir=str(tmp_path), run_id="pred-mode",
+    )
+    assert gs.run()["last_iteration"] == 1
+    # the ranked path left the occurrence table; the rest stays keyed alike
+    chosen = gs.to_expand
+    assert chosen is not None and chosen["predicate"] == EX + "prop/partof"
+    occ = [chosen] + gs.final_state()["occurrences"].collect()
+    assert all(r["direction"] is None and r["endpoint"] is None for r in occ)
 
 
 def test_expand_grid_derives_mode():

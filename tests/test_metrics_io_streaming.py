@@ -1135,6 +1135,28 @@ def test_daily_append_composition(spark, tmp_path):
     assert before == after
 
 
+def test_daily_append_default_pagerank_converges(spark, tmp_path):
+    """With default arguments a cold day's PageRank stops by its tolerance,
+    not by the iteration cap: one 50-turn conversation takes ~50 rounds
+    to reach tol 1e-4 (a cap of 20 used to stop it unconverged)."""
+    from chronographer_spark.io.catalog import Catalog
+    from chronographer_spark.pipeline_append import daily_append
+
+    day = spark.createDataFrame(
+        [
+            ("conv0", t, ["user", "assistant", "tool"][t % 3],
+             f"event login with value {10 + t} recorded on 2024-01-0{1 + t % 7}",
+             "login" if t % 3 == 2 else "", None)
+            for t in range(50)
+        ],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp",
+    )
+    s = daily_append(Catalog(spark, str(tmp_path)), day, day.limit(0), "day1")
+    assert not s["warm_start"]
+    assert 20 < s["pr_iterations_run"] < 100
+
+
 def test_daily_append_resumes_after_midjob_crash(spark, tmp_path):
     """Resumability under PARTIAL failure, not just clean re-run: crash
     the day-2 job after the label/triple/edge MERGEs but before the

@@ -112,7 +112,7 @@ def test_exact_first_clusters_equal_direct_pipeline(spark):
     nodes = docs.select(F.col("doc_id").alias("node"))
     direct = {
         (r["node"], r["component"])
-        for r in connected_components(edges, all_nodes=nodes, strategy="window").collect()
+        for r in connected_components(edges, all_nodes=nodes).collect()
     }
     assert fast == direct
 

@@ -97,9 +97,9 @@ edges_strategy = st.lists(
 )
 
 
-@given(edges=edges_strategy)
+@given(edges=edges_strategy, precontract=st.booleans())
 @settings(**SETTINGS)
-def test_connected_components_matches_union_find(spark, edges):
+def test_connected_components_matches_union_find(spark, edges, precontract):
     from chronographer_spark.linking.canonicalize import connected_components
 
     e = spark.createDataFrame(
@@ -107,7 +107,7 @@ def test_connected_components_matches_union_find(spark, edges):
     )
     got = {
         (r["node"], r["component"])
-        for r in connected_components(e, strategy="window", precontract=True).collect()
+        for r in connected_components(e, precontract=precontract).collect()
     }
 
     # reference model: driver-side union-find

@@ -183,6 +183,35 @@ def test_ranker_priority_class_restriction(spark):
     assert rank_top1(occ, "pred_freq")["predicate"] == "rare"
 
 
+def test_pred_closure_arrays_independent_of_partitioning(spark):
+    """The superclass arrays are sorted, so the closure is element-wise
+    equal whether its input arrives in 1 partition or 4 (it lands in the
+    checkpointed pending tables)."""
+    from chronographer_spark.operators.ordering import build_pred_closure
+
+    pred_classes = [
+        (f"p{i}", [f"c{(i + k) % 12}" for k in range(4)]) for i in range(8)
+    ]
+    ancestors = [(f"c{j}", [f"a{(j * 5 + k) % 17}" for k in range(3)]) for j in range(12)]
+
+    def closure(n):
+        pc = spark.createDataFrame(
+            spark.sparkContext.parallelize(pred_classes, n),
+            "predicate string, classes array<string>",
+        )
+        sup = spark.createDataFrame(
+            spark.sparkContext.parallelize(ancestors, n),
+            "class string, ancestors array<string>",
+        )
+        rows = build_pred_closure(pc, sup).collect()
+        return {r["predicate"]: list(r["superclass"]) for r in rows}
+
+    one, four = closure(1), closure(4)
+    assert len(one) == 8
+    assert one == four
+    assert all(v == sorted(v) for v in one.values())
+
+
 # --- end-to-end search + resume ----------------------------------------------
 
 

@@ -266,9 +266,10 @@ def test_streaming_stateful_idle_timeout_flush(spark, tmp_path):
         q.stop()
 
 
-def test_connected_components_strategies_agree(spark):
-    """agg and window CC strategies produce identical components on a mixed
-    graph: two chains, a hub star (the skew shape), and an isolated node."""
+def test_connected_components_precontract_agrees(spark):
+    """CC with and without per-partition precontraction produces identical
+    components on a mixed graph: two chains, a hub star (the skew shape),
+    and an isolated node."""
     from chronographer_spark.linking.canonicalize import connected_components
 
     edges = [(i, i + 1) for i in range(1, 6)]          # chain 1..6
@@ -278,12 +279,41 @@ def test_connected_components_strategies_agree(spark):
     nodes = spark.createDataFrame([(n,) for n in {0, *range(1, 7), 10, 11, 12, 100, *range(101, 121)}], ["node"])
 
     outs = {}
-    for strat, pre in (("agg", False), ("window", False), ("window", True), ("agg", True)):
-        cc = connected_components(e, all_nodes=nodes, strategy=strat, precontract=pre)
-        outs[(strat, pre)] = {(r["node"], r["component"]) for r in cc.collect()}
-    assert len(set(map(frozenset, outs.values()))) == 1, "strategies disagree"
-    comp = dict(outs[("agg", False)])
+    for pre in (False, True):
+        cc = connected_components(e, all_nodes=nodes, precontract=pre)
+        outs[pre] = {(r["node"], r["component"]) for r in cc.collect()}
+    assert outs[False] == outs[True], "precontraction changed the components"
+    comp = dict(outs[False])
     assert comp[6] == 1 and comp[12] == 10 and comp[120] == 100 and comp[0] == 0
+
+
+def test_connected_components_job_count(spark):
+    """Spark jobs of one CC call on a fixed chain fixture (8 chains of 32
+    nodes over 4 partitions), counted per job group. Each star round is
+    one checkpoint whose fingerprint is observed on the way; the count is
+    pinned so an extra action per round shows up here."""
+    import uuid
+
+    from chronographer_spark.linking.canonicalize import connected_components
+
+    sc = spark.sparkContext
+    edges = [(c * 100 + i, c * 100 + i + 1) for c in range(8) for i in range(31)]
+    e = spark.createDataFrame(sc.parallelize(edges, 4), "src long, dst long")
+    jobs = {}
+    for pre in (False, True):
+        group = f"cc-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "connected_components")
+        try:
+            got = {
+                (r["node"], r["component"])
+                for r in connected_components(e, precontract=pre).collect()
+            }
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert got == {(c * 100 + i, c * 100) for c in range(8) for i in range(32)}
+        jobs[pre] = len(sc.statusTracker().getJobIdsForGroup(group))
+    # measured at local[4], 8 shuffle partitions (the session fixture)
+    assert jobs == {False: 37, True: 17}
 
 
 def test_streaming_stateful_checkpoint_recovery(spark, tmp_path):
