@@ -200,13 +200,9 @@ class Catalog:
             current = self.read(table)
             kept = current.join(delta.select(*keys).dropDuplicates(), keys, "left_anti")
             merged = kept.unionByName(delta.select(*kept.columns))
-            # write to a temp table then swap (parquet has no snapshot isolation)
-            tmp = table + "__tmp"
-            part = [partition_col] if partition_col else None
-            self.write(merged, tmp, partition_by=part)
-            final = self.read(tmp).localCheckpoint(eager=True)
-            self.write(final, table, partition_by=part)
-            self.drop(tmp)
+            self._replace(
+                merged, table, [partition_col] if partition_col else None
+            )
             return
         touched = [
             r[0] for r in delta.select(partition_col).dropDuplicates().collect()
@@ -224,6 +220,21 @@ class Catalog:
             .partitionBy(partition_col)
             .parquet(self.path(table))
         )
+
+    def _replace(
+        self, df: DataFrame, table: str, partition_by: list[str] | None
+    ) -> None:
+        """Replace `table` by `df`, which may read `table`: write `df` to
+        `<table>__tmp`, then swap the directories by rename (parquet has no
+        snapshot isolation). A write that fails leaves the table as it was;
+        the swap itself is two renames, the only window in which the table
+        is missing (it then sits under `<table>__old`)."""
+        tmp, old = table + "__tmp", table + "__old"
+        self.write(df, tmp, partition_by=partition_by)
+        self.drop(old)
+        os.rename(self.path(table), self.path(old))
+        os.rename(self.path(tmp), self.path(table))
+        self.drop(old)
 
     def drop(self, table: str) -> None:
         import shutil
@@ -292,6 +303,14 @@ class VersionedCatalog(Catalog):
         with open(os.path.join(vdir, "_manifest.json"), "w", encoding="utf-8") as f:
             _json.dump({"version": new_v, "rows": n, "table": table}, f)
         return new_v
+
+    def _replace(
+        self, df: DataFrame, table: str, partition_by: list[str] | None
+    ) -> None:
+        """A merge publishes a new snapshot: the version it reads stays
+        untouched, so no temporary table or swap is needed, and the
+        table's history is kept."""
+        self.write(df, table, partition_by=partition_by)
 
     def read(self, table: str, version: int | None = None) -> DataFrame:
         vs = self._versions(table)

@@ -20,9 +20,11 @@ graphs; each round is checkpointed to cut lineage (SURVEY.md §7.4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..checkpoints import observed_checkpoint, release_checkpoint
 
 # star rounds before the loop gives up (O(log^2 n) rounds converge far below)
 MAX_ITER = 50
@@ -75,13 +77,11 @@ def _small_star(edges: DataFrame) -> DataFrame:
 def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple]:
     """Materialize `edges` (one action, lineage cut) and return it with its
     fingerprint — row count and xor of row hashes — observed on the way."""
-    obs = Observation()
-    edges = edges.observe(
-        obs,
+    edges, m = observed_checkpoint(
+        edges,
         F.count(F.lit(1)).alias("n"),
         F.bit_xor(F.xxhash64("src", "dst")).alias("h"),  # overflow-free
-    ).localCheckpoint(eager=True)
-    m = obs.get
+    )
     return edges, (m["n"], m["h"])
 
 
@@ -159,15 +159,15 @@ def connected_components(
     )
     for _ in range(MAX_ITER):
         nxt, nxt_sig = _checkpoint(_small_star(_large_star(cur)))
-        # the fingerprint rides on the round's checkpoint; on a hit,
-        # confirm exactly once — the loop is deterministic either way
-        if nxt_sig == sig and (
-            nxt.exceptAll(cur).limit(1).count() == 0
-            and cur.exceptAll(nxt).limit(1).count() == 0
-        ):
-            cur = nxt
-            break
+        # the fingerprint rides on the round's checkpoint; on a hit, confirm
+        # exactly once. The hit already says both rounds hold the same number
+        # of rows, so nxt ⊆ cur as multisets (nxt − cur empty) means nxt ==
+        # cur: the reverse difference would find nothing and is not run.
+        done = nxt_sig == sig and nxt.exceptAll(cur).limit(1).count() == 0
+        release_checkpoint(cur)
         cur, sig = nxt, nxt_sig
+        if done:
+            break
 
     # after convergence edges form stars (node -> root)
     comp = cur.groupBy("src").agg(F.min("dst").alias("component")).select(
@@ -272,10 +272,11 @@ def incremental_components(
         .unionByName(contracted.select(F.col("dst").alias("node")))
         .distinct()
     )
+    # materialized once: `changed` and `new_rows` both read it
     delta = connected_components(
         contracted.filter(F.col("src") != F.col("dst")),
         all_nodes=reps,
-    )
+    ).localCheckpoint(eager=True)
     changed = delta.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("component"), F.col("component").alias("__new")
     )

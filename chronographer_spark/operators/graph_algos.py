@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..checkpoints import observed_checkpoint, release_checkpoint
+
 
 def transitive_closure(
     edges: DataFrame, max_iter: int = 20
@@ -54,18 +56,26 @@ def pagerank(
 
     The KG-usage ranking primitive (event/entity importance over the built
     narrative graph) and the engine's second iterative-joins algorithm
-    family beside connected components. One hash join + one aggregate per
-    iteration, per-round localCheckpoint cuts lineage.
+    family beside connected components.
+
+    Plan: the out-degree is joined into the edges once and that adjacency
+    is checkpointed, as are the initial ranks (each node carries a sink
+    flag: no out-edges). A round is ONE action, its eager
+    localCheckpoint: the adjacency joined with the ranks gives the
+    contributions, and they meet the ranks rows in one aggregate per node
+    (the left join of the summed contributions onto the ranks, without
+    shuffling the ranks a second time). The scalars the next step needs
+    ride on that checkpoint as an `Observation` — max |new − old| for
+    `tol`, the sink mass for `dangling` — so neither option adds a job.
+    Superseded rounds' blocks are released as the loop goes.
 
     Options:
     - `dangling=True` redistributes sink-node mass uniformly: per round the
       total rank of nodes with no out-edges is spread as
       `d · mass / N` over every node, so total rank is conserved at N (the
-      fixed-point of the row-stochastic transition). Costs one scalar
-      aggregate per round (a 1-row collect, same O(1) driver traffic as the
-      CC convergence fingerprint).
-    - `tol` stops early once max |Δrank| < tol between rounds (checked with
-      a scalar aggregate); `iterations` then acts as the round cap.
+      fixed-point of the row-stochastic transition).
+    - `tol` stops early once max |Δrank| < tol between rounds; `iterations`
+      then acts as the round cap.
 
     - `weight_col` makes rank flow PROPORTIONAL to edge weight (share of
       the source's total out-weight) instead of uniformly over out-edges —
@@ -79,18 +89,27 @@ def pagerank(
     Deterministic up to float summation order; gate values are scaled with
     a wide margin.
     """
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
+    # one row per node; a node is a sink unless it is some edge's source
+    nodes = edges.select(
+        F.col("src").alias("node"), F.lit(False).alias("sink")
+    ).unionByName(
+        edges.select(F.col("dst").alias("node"), F.lit(True).alias("sink"))
     )
     if all_nodes is not None:
-        nodes = nodes.unionByName(all_nodes.select("node"))
-    nodes = nodes.dropDuplicates().localCheckpoint(eager=True)
+        nodes = nodes.unionByName(
+            all_nodes.select("node", F.lit(True).alias("sink"))
+        )
+    nodes = nodes.groupBy("node").agg(F.min("sink").alias("sink"))
+    wcols = [weight_col] if weight_col else []
     wsum = (
         F.sum(F.col(weight_col).cast("double")) if weight_col else F.count("*")
     )
-    outdeg = edges.groupBy("src").agg(wsum.alias("d")).localCheckpoint(eager=True)
-    n_nodes = nodes.count() if dangling else None
+    outdeg = edges.groupBy("src").agg(wsum.alias("__d"))
+    adj = (
+        edges.select("src", "dst", *wcols)
+        .join(outdeg, "src")
+        .localCheckpoint(eager=True)
+    )
     if init_ranks is not None:
         # warm start: resume from a stored labeling (the incremental-append
         # regime — after a small edge batch the prior ranks are near the new
@@ -100,56 +119,69 @@ def pagerank(
             init_ranks.select("node", F.col("rank").alias("__r0")),
             "node",
             "left",
-        ).select("node", F.coalesce("__r0", F.lit(1.0)).alias("rank"))
+        ).select("node", F.coalesce("__r0", F.lit(1.0)).alias("rank"), "sink")
     else:
         ranks = nodes.withColumn("rank", F.lit(1.0))
+    # the sink mass of each rank table feeds the next round's dangling share
+    sink_mass = F.sum(F.when(F.col("sink"), F.col("rank"))).alias("sink_mass")
+    ranks, seen = observed_checkpoint(
+        ranks, sink_mass, F.count(F.lit(1)).alias("n")
+    )
+    n_nodes = seen["n"]
+    flow = (
+        (F.col("rank") * F.col(weight_col).cast("double") / F.col("__d"))
+        if weight_col
+        else (F.col("rank") / F.col("__d"))
+    )
     iters_run = 0
     for _ in range(iterations):
         iters_run += 1
-        flow = (
-            (F.col("rank") * F.col(weight_col).cast("double") / F.col("d"))
-            if weight_col
-            else (F.col("rank") / F.col("d"))
-        )
-        contribs = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .join(outdeg, "src")
-            .select(F.col("dst").alias("node"), flow.alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("m"))
-        )
         share = 0.0
         if dangling and n_nodes:
-            row = (
-                ranks.join(outdeg, ranks["node"] == outdeg["src"], "left_anti")
-                .agg(F.sum("rank"))
-                .first()
+            share = (seen["sink_mass"] or 0.0) / n_nodes
+        # the round's contributions and the current ranks meet in ONE
+        # aggregate per node (every edge target is a node): m sums the
+        # contributions, the ranks rows carry the old rank and sink flag
+        contribs = adj.join(
+            ranks.select(F.col("node").alias("src"), "rank"), "src"
+        ).select(
+            F.col("dst").alias("node"),
+            flow.alias("c"),
+            F.lit(None).cast("double").alias("rank"),
+            F.lit(None).cast("boolean").alias("sink"),
+        )
+        grouped = (
+            ranks.select(
+                "node", F.lit(None).cast("double").alias("c"), "rank", "sink"
             )
-            share = (row[0] or 0.0) / n_nodes
-        new_ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
+            .unionByName(contribs)
+            .groupBy("node")
+            .agg(
+                F.sum("c").alias("m"),
+                F.max("rank").alias("__old"),
+                F.max("sink").alias("sink"),
+            )
+        )
+        new_ranks, seen = observed_checkpoint(
+            grouped.select(
                 "node",
                 (
                     F.lit(1.0 - damping)
                     + F.lit(damping)
                     * (F.coalesce("m", F.lit(0.0)) + F.lit(share))
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+                "sink",
+                "__old",
+            ),
+            sink_mass,
+            F.max(F.abs(F.col("rank") - F.col("__old"))).alias("delta"),
         )
-        if tol is not None:
-            delta = (
-                new_ranks.alias("n")
-                .join(ranks.alias("o"), "node")
-                .agg(F.max(F.abs(F.col("n.rank") - F.col("o.rank"))))
-                .first()[0]
-            )
-            ranks = new_ranks
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = new_ranks
+        release_checkpoint(ranks)
+        ranks = new_ranks
+        if tol is not None and seen["delta"] is not None and seen["delta"] < tol:
+            break
+    release_checkpoint(adj)
+    ranks = ranks.select("node", "rank")
     if return_iters:
         return ranks, iters_run
     return ranks

@@ -14,6 +14,12 @@ resumes by re-running (the reference rebuilds everything from scratch
 per run — src/get_equivalent_url.py — which a 10^12-turn history cannot
 afford).
 
+One action per stage: a day over small data is bound by its Spark job
+count, not its data, so each intermediate several stages share (delta
+triples, order edges, label upserts, each PageRank round) is computed
+once into an eager localCheckpoint and every count rides on one as an
+`Observation`.
+
 Delta contract (mirrored bit-for-bit by the `daily_append_step` oracle):
 the day's triples are those of `build_event_graph(bridge ∪ batch)`
 restricted to
@@ -33,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chronographer_spark.checkpoints import observed_checkpoint
 from chronographer_spark.graph.materialize import event_uri_col
 from chronographer_spark.vocab import NEXT_EVENT, NF_TO_PRED
 
@@ -42,20 +49,34 @@ def delta_triples(batch_tx: DataFrame, bridge_tx: DataFrame) -> DataFrame:
     batch) turns only, then keep batch-subject triples, conversation
     hasSubEvent links to batch events, and bridge nextEvent edges —
     see module docstring for why this equals the full-graph restriction.
+
+    One pass over the graph: the day's event ids are broadcast-left-joined
+    on `subject` and on `object`, and one filter applies the oracle's
+    WHERE-OR. A row caught by both rules is still one row, and
+    `build_event_graph` emits no duplicate triples, so the delta is a set
+    without a `distinct`. The batch ids are assumed broadcastable (one
+    row per batch turn — the incremental regime).
     """
     from chronographer_spark.graph.materialize import build_event_graph
 
     g = build_event_graph(bridge_tx.unionByName(batch_tx))
-    batch_ids = batch_tx.select(event_uri_col().alias("__b")).distinct()
-    by_subject = g.join(
-        batch_ids, g["subject"] == F.col("__b"), "left_semi"
+    # distinct: a batch may repeat a turn row, and a left join would
+    # repeat the triples with it
+    ids = batch_tx.select(event_uri_col().alias("__b")).distinct()
+    by_s = F.broadcast(ids.select(F.col("__b").alias("__s")))
+    by_o = F.broadcast(ids.select(F.col("__b").alias("__o")))
+    return (
+        g.join(by_s, F.col("subject") == F.col("__s"), "left")
+        .join(by_o, F.col("object") == F.col("__o"), "left")
+        .filter(
+            F.col("__s").isNotNull()
+            | (
+                F.col("predicate").isin(NF_TO_PRED["part_of_inverse"], NEXT_EVENT)
+                & F.col("__o").isNotNull()
+            )
+        )
+        .drop("__s", "__o")
     )
-    by_object = g.filter(
-        F.col("predicate").isin(NF_TO_PRED["part_of_inverse"], NEXT_EVENT)
-    ).join(batch_ids, g["object"] == F.col("__b"), "left_semi")
-    # a batch-subject nextEvent row is caught by BOTH rules — distinct
-    # keeps the delta a set, as the oracle's WHERE-OR does
-    return by_subject.unionByName(by_object).distinct()
 
 
 def daily_append(
@@ -74,23 +95,34 @@ def daily_append(
     """Run one daily append against a Catalog. Returns a summary dict
     (counts + PageRank rounds actually run).
 
+    Every stage runs once: each shared intermediate (the delta triples,
+    the order edges, the label upserts) is one eager localCheckpoint that
+    all of its consumers read, and the summary counts are `Observation`s
+    on those checkpoints, not extra `count()`s (a small-data day is bound
+    by its Spark job count, not its data).
+
     Stage shapes at 10^12 turns:
     - delta triples: extraction + materialization over the BATCH only
-      (bridge rows are one turn per touched conversation);
+      (bridge rows are one turn per touched conversation), restricted in
+      one pass by two broadcast lookups of the batch event ids;
     - incremental CC: two passes over the prior labels (broadcast batch
       endpoint lookup + broadcast changed-rep relabel), the iterative
       loop sees only the contracted delta
       (linking/canonicalize.incremental_components);
-      emit="delta" keeps the MERGE batch-sized;
+      emit="delta" keeps the MERGE batch-sized; isolated new nodes come
+      from the batch, the edges and the prior labels, never from a second
+      evaluation of the CC result;
     - warm-start PageRank: prior ranks seed the iteration, so the
       tol-criterion converges in rounds ~ log(perturbation)/log(1/d)
-      instead of a cold start's full count (graph_algos.pagerank); the
-      default cap of 100 rounds sits above the ~50 a cold bootstrap needs
-      to reach the default tol, so a default-args run stops converged;
+      instead of a cold start's full count (graph_algos.pagerank, one
+      action per round); the default cap of 100 rounds sits above the ~50
+      a cold bootstrap needs to reach the default tol, so a default-args
+      run stops converged;
     - every write carries lineage columns and merges idempotently:
       triples/edges MERGE on (key, lineage_run_id) partition-pruned to
-      this run's partition; labels MERGE on node; ranks rewrite via the
-      catalog's tmp-swap (parquet's snapshot-isolation stand-in).
+      this run's partition; labels MERGE on node (the catalog's
+      write-then-rename swap); ranks overwrite their table from
+      PageRank's last checkpoint, which no longer reads it.
     """
     from chronographer_spark.io.catalog import with_lineage
     from chronographer_spark.linking.canonicalize import (
@@ -99,11 +131,13 @@ def daily_append(
     )
     from chronographer_spark.operators.graph_algos import pagerank
 
-    delta = delta_triples(batch_tx, bridge_tx).localCheckpoint(eager=True)
-    edges = (
-        delta.filter(F.col("predicate") == NEXT_EVENT)
-        .select(F.col("subject").alias("src"), F.col("object").alias("dst"))
-        .localCheckpoint(eager=True)
+    rows = F.count(F.lit(1)).alias("rows")
+    delta, delta_m = observed_checkpoint(delta_triples(batch_tx, bridge_tx), rows)
+    edges, edges_m = observed_checkpoint(
+        delta.filter(F.col("predicate") == NEXT_EVENT).select(
+            F.col("subject").alias("src"), F.col("object").alias("dst")
+        ),
+        rows,
     )
     batch_nodes = batch_tx.select(event_uri_col().alias("node")).distinct()
 
@@ -112,9 +146,15 @@ def daily_append(
         prior = catalog.read(labels_table).select("node", "component")
         labels_delta = incremental_components(prior, edges, emit="delta")
         # isolated new nodes (a 1-turn conversation's only event touches
-        # no edge) label themselves
+        # no edge) label themselves: batch nodes that are no edge endpoint
+        # and not in prior. Every endpoint is in prior or among the delta's
+        # new rows, so this is batch − labels_delta − prior without a
+        # second evaluation of labels_delta.
+        endpoints = edges.select(F.col("src").alias("node")).unionByName(
+            edges.select(F.col("dst").alias("node"))
+        )
         isolated = (
-            batch_nodes.join(labels_delta, "node", "left_anti")
+            batch_nodes.join(endpoints, "node", "left_anti")
             .join(prior, "node", "left_anti")
             .select("node", F.col("node").alias("component"))
         )
@@ -127,8 +167,7 @@ def daily_append(
             .distinct()
         )
         labels_delta = connected_components(edges, all_nodes=nodes, precontract=True)
-    labels_delta = labels_delta.localCheckpoint(eager=True)
-    n_labels = labels_delta.count()
+    labels_delta, labels_m = observed_checkpoint(labels_delta, rows)
     catalog.merge_upsert(
         with_lineage(labels_delta, run_id, "incremental_cc"),
         labels_table,
@@ -169,9 +208,9 @@ def daily_append(
 
     return {
         "run_id": run_id,
-        "n_delta_triples": delta.count(),
-        "n_delta_edges": edges.count(),
-        "n_label_upserts": n_labels,
+        "n_delta_triples": delta_m["rows"],
+        "n_delta_edges": edges_m["rows"],
+        "n_label_upserts": labels_m["rows"],
         "pr_iterations_run": iters,
         "warm_start": init is not None,
     }

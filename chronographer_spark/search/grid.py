@@ -28,6 +28,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..operators.filtering import FilteringConfig
 from .driver import GraphSearch, SearchConfig
@@ -96,15 +97,21 @@ def run_grid(
                 .select("subject", "predicate", "object")
                 .dropDuplicates()
             )
-            n_nodes = (
-                sub.select("subject").union(sub.select("object")).distinct().count()
+            # one pass: each triple yields its subject (pos 0) and object
+            n_triples, n_nodes = (
+                sub.select(F.posexplode(F.array("subject", "object")))
+                .agg(
+                    F.count(F.when(F.col("pos") == 0, 1)),
+                    F.countDistinct("col"),
+                )
+                .first()
             )
             best_f1 = max((m.get("f1", 0.0) for m in gs.metrics), default=None)
             swept = {k: getattr(cfg, k) for k in sorted(grid) if hasattr(cfg, k)}
             return (
                 cell_id,
                 json.dumps(swept, sort_keys=True),
-                sub.count(),
+                n_triples,
                 n_nodes,
                 best_f1,
             )

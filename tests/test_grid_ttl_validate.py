@@ -108,6 +108,30 @@ def test_run_grid_summary(spark, tmp_path):
     assert len(rows) == 2
     assert all(r["n_subgraph_triples"] > 0 for r in rows)
     assert len({r["cell_id"] for r in rows}) == 2
+    # the one-pass cell summary equals two separate counts over each
+    # cell's checkpointed final subgraph
+    from chronographer_spark.search.driver import GraphSearch
+    from chronographer_spark.search.grid import expand_grid
+
+    cells = expand_grid(
+        base, {"type_ranking": ["pred_object_freq", "entropy_pred_object_freq"]}
+    )
+    for r, (cell_id, cfg) in zip(rows, cells):
+        sub = (
+            GraphSearch(
+                spark, _kg(spark), cfg, filt,
+                pred_domain=pred_domain, pred_range=pred_range,
+                superclasses=superclasses, checkpoint_dir=str(tmp_path),
+                run_id=f"grid-{cell_id}",
+            )
+            .final_state()["subgraph"]
+            .select("subject", "predicate", "object")
+            .dropDuplicates()
+        )
+        nodes = sub.select("subject").union(sub.select("object")).distinct()
+        assert (r["cell_id"], r["n_subgraph_triples"], r["n_nodes"]) == (
+            cell_id, sub.count(), nodes.count()
+        )
 
     # parallel cells (thread pool + per-cell scheduler pools) must produce
     # the identical summary in the identical order

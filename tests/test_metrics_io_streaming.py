@@ -118,6 +118,53 @@ def test_merge_upsert_key_moves_partition_no_duplicates(spark, tmp_path):
     assert os.path.isdir(os.path.join(str(tmp_path), "t", "part=p3"))
 
 
+def test_merge_upsert_swaps_by_rename(spark, tmp_path, monkeypatch):
+    """The unpartitioned merge writes the merged table next to the old one
+    and swaps the directories by rename: no temporary directory is left
+    behind, and a write that fails leaves the old table readable and
+    intact."""
+    import os
+
+    from chronographer_spark.io.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path))
+    cat.write(spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"), "t")
+    cat.merge_upsert(
+        spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string"), "t",
+        keys=["id"],
+    )
+    want = [(1, "a"), (2, "B"), (3, "c")]
+    assert sorted(map(tuple, cat.read("t").collect())) == want
+    assert sorted(os.listdir(tmp_path)) == ["t"]  # no t__tmp / t__old
+
+    def failing_write(*a, **k):
+        raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(cat, "write", failing_write)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        cat.merge_upsert(
+            spark.createDataFrame([(1, "X")], "id long, v string"), "t", keys=["id"]
+        )
+    monkeypatch.undo()
+    assert sorted(map(tuple, cat.read("t").collect())) == want
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+
+
+def test_versioned_merge_upsert_publishes_snapshot(spark, tmp_path):
+    """On the versioned catalog a merge publishes a new snapshot and keeps
+    the previous one readable (time travel survives the merge)."""
+    from chronographer_spark.io.catalog import VersionedCatalog
+
+    cat = VersionedCatalog(spark, str(tmp_path))
+    cat.write(spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"), "t")
+    cat.merge_upsert(
+        spark.createDataFrame([(2, "B")], "id long, v string"), "t", keys=["id"]
+    )
+    assert [h["version"] for h in cat.history("t")] == [0, 1]
+    assert sorted(map(tuple, cat.read("t", version=0).collect())) == [(1, "a"), (2, "b")]
+    assert sorted(map(tuple, cat.read("t").collect())) == [(1, "a"), (2, "B")]
+
+
 def test_catalog_partitioned_triples_prune(spark, tmp_path):
     from chronographer_spark.io.catalog import Catalog
 
@@ -1067,11 +1114,15 @@ def test_daily_append_composition(spark, tmp_path):
     to a cold CC over the full order graph; day-2 must warm-start; a
     re-run of day 2 with the same run_id must be idempotent on
     triples/edges/labels (MERGE semantics, not blind append)."""
+    import uuid
+
     import pyspark.sql.functions as F
 
+    from chronographer_spark.graph.materialize import build_event_graph, event_uri_col
     from chronographer_spark.io.catalog import Catalog
     from chronographer_spark.linking.canonicalize import connected_components
     from chronographer_spark.pipeline_append import daily_append, delta_triples
+    from chronographer_spark.vocab import NEXT_EVENT, NF_TO_PRED
 
     def tx(rows):
         return spark.createDataFrame(
@@ -1094,7 +1145,16 @@ def test_daily_append_composition(spark, tmp_path):
 
     day2 = tx([("convA", 6), ("convA", 7), ("convC", 0), ("convC", 1), ("convD", 0)])
     bridge = tx([("convA", 5)])
-    s2 = daily_append(cat, day2, bridge, "day2", pr_iterations=8, pr_tol=None)
+    sc = spark.sparkContext
+    group = f"day2-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "daily_append day 2")
+    try:
+        s2 = daily_append(cat, day2, bridge, "day2", pr_iterations=8, pr_tol=None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # every stage runs once, PageRank's 8 rounds at 5 jobs each (measured
+    # at local[4], 8 shuffle partitions, the session fixture)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 94
     assert s2["warm_start"]
     assert s2["n_label_upserts"] == 5  # 2 convA + 2 convC + 1 isolated convD
 
@@ -1121,6 +1181,24 @@ def test_daily_append_composition(spark, tmp_path):
     assert ("ng:event/convA/5", "ng:event") not in preds
     assert ("ng:event/convA/5", "ng:nextEvent") in preds  # ONLY the bridge edge
     assert not any(s == "ng:event/convA/5" and p != "ng:nextEvent" for s, p in preds)
+    # the one-pass delta equals the two-branch semi-join formula + distinct
+    # as multisets; the fixture has batch-subject nextEvent rows (caught by
+    # both rules) and the bridge edge (caught by the object rule only)
+    g = build_event_graph(bridge.unionByName(day2))
+    ids = day2.select(event_uri_col().alias("__b")).distinct()
+    two_branch = (
+        g.join(ids, g["subject"] == F.col("__b"), "left_semi")
+        .unionByName(
+            g.filter(
+                F.col("predicate").isin(NF_TO_PRED["part_of_inverse"], NEXT_EVENT)
+            ).join(ids, g["object"] == F.col("__b"), "left_semi")
+        )
+        .distinct()
+    )
+    want_rows = sorted(map(tuple, two_branch.collect()))
+    assert ("ng:event/convA/6", "ng:nextEvent", "ng:event/convA/7") in want_rows
+    assert ("ng:event/convA/5", "ng:nextEvent", "ng:event/convA/6") in want_rows
+    assert sorted(map(tuple, d2.collect())) == want_rows
 
     # idempotent re-run: same run_id, same content
     before = {

@@ -286,6 +286,57 @@ def test_pagerank_convergence_stop(spark):
         assert abs(tolled[f"s{i}"] - r_s) < 1e-8
 
 
+def _pagerank_fixture(spark):
+    # a 40-node ring with chords plus four sinks (no out-edges)
+    edges = [(f"v{k}", f"v{(k + 1) % 40}") for k in range(40)]
+    edges += [(f"v{k}", f"v{(7 * k + 3) % 40}") for k in range(0, 40, 3)]
+    edges += [(f"v{k}", f"sink{k % 4}") for k in range(0, 40, 5)]
+    return spark.createDataFrame(edges, "src string, dst string")
+
+
+def test_pagerank_jobs_per_round(spark):
+    """One action per round: the `tol` test (max |Δrank|) and the dangling
+    share (sink mass) are observed on the round's own checkpoint, so
+    neither adds a Spark job. Counted per job group."""
+    import uuid
+
+    from chronographer_spark.operators.graph_algos import pagerank
+
+    sc = spark.sparkContext
+    e = _pagerank_fixture(spark)
+
+    def jobs(**kw):
+        group = f"pr-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "pagerank")
+        try:
+            pagerank(e, **kw).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    three = jobs(iterations=3)
+    # tol=0.0 never stops early: same rounds, same jobs
+    assert jobs(iterations=3, tol=0.0) == three
+    assert jobs(iterations=3, dangling=True) == three
+    assert jobs(iterations=3, dangling=True, tol=0.0) == three
+    # measured at local[4], 8 shuffle partitions (the session fixture):
+    # 7 for the set-up and the collect, 5 per round
+    assert (three, jobs(iterations=4) - three) == (22, 5)
+
+
+def test_pagerank_releases_superseded_rounds(spark):
+    """Each round's checkpoint is released once the next one exists: a
+    30-round run leaves only its result persisted, not 30 rounds."""
+    from chronographer_spark.operators.graph_algos import pagerank
+
+    jsc = spark.sparkContext._jsc
+    e = _pagerank_fixture(spark).localCheckpoint(eager=True)
+    before = jsc.getPersistentRDDs().size()
+    ranks = pagerank(e, iterations=30, dangling=True)
+    assert jsc.getPersistentRDDs().size() - before <= 1
+    assert abs(sum(r["rank"] for r in ranks.collect()) - 44) < 1e-6
+
+
 vocab_strategy = st.lists(
     st.text(alphabet="abcd", min_size=1, max_size=5),
     min_size=1,
